@@ -610,6 +610,23 @@ where a bloom sidecar must rebuild from the full kept seen set
 blobs at equal FPP); switch to cuckoo when the crawl needs refresh
 semantics.
 
+**2026-10-17 — decision: bloom is the only family; cuckoo deleted.** The
+round-4 table above is kept as history. Two facts settled it. (1) At the
+default `CrawlConfig` (`bloom_min_seen`=1M, `n_buckets`=32,
+`bloom_bits_per_bucket`=2^17) the sidecar switches on at ~31,250 keys per
+bucket; a cuckoo blob of that size held ~12,000 keys (stash 3,811 of
+4,096) and raised `RuntimeError: cuckoo stash overflow` at 31,250, while
+the bloom blob holds them all at FPP ≈0.23 with no false negatives
+(pinned in tests/test_bloom.py). (2) `forget_seen` rewrites the whole `seen`
+table anyway, so cuckoo's in-place delete (∝ |expired|) never changed the
+order of the maintenance cost. Five alternating bloom-vs-cuckoo pairs of
+perfbench `crawl_tiers` (seeds 102–106, `local[4]` on a 4-vCPU box, all
+correct) came out level:
+`job_s` median 21.88 s vs 20.43 s (spreads 18.7–22.4 and 18.1–22.2),
+`crawl_urls_per_s` 7.53 vs 7.60, `peak_rss_mb` 2857 vs 2822. Removed:
+`sparkcrawl/cuckoo.py`, `CrawlConfig.seen_filter_kind`,
+`CrawlConfig.dedup_bloom` and the `--seen-filter` CLI flag.
+
 ## Headline-suite size across rounds
 
 The bench total (`value` = queries + crawl wall) is only comparable

@@ -173,10 +173,11 @@ def run_maintenance_bench(spark, corpus: str, store: str,
     measures the real post-crawl state, not a fixture. Three timed phases:
 
     - ``forget``: expire every seen key first enqueued in the first half of
-      the crawl (QUEUED keys exempt). The bench store uses the default
-      bloom sidecar, so this is the EXPENSIVE honest path — a full rebuild
-      pass over the kept seen set (the cost the cuckoo backend exists to
-      avoid; cost ∝ |seen|, the design-point-relevant term).
+      the crawl (QUEUED keys exempt) and rewrite the kept seen set. The
+      bench crawl's ~30k-key seen set stays below ``bloom_min_seen``, so
+      the store has no sidecar and ``forget_seen`` reports
+      ``"sidecar": "none"`` — this phase does NOT time a bloom rebuild
+      (perfbench's ``crawl_tiers`` workload does).
     - ``enqueue``: score the forgotten population by the Cho &
       Garcia-Molina expected-missed-changes policy and re-enqueue the
       top-``round_size`` as QUEUED frontier rows (seen + sidecar re-entry

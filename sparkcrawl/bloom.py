@@ -94,7 +94,16 @@ class BloomFilter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BloomFilter":
-        assert blob[:4] == _MAGIC, "bad bloom blob"
-        m_bits, k = struct.unpack("<QI", blob[4:16])
+        """Raises ValueError (not assert, which ``python -O`` strips) on a
+        foreign magic or a length that disagrees with the header: misread
+        bits would be false negatives, i.e. duplicate enqueues."""
+        if blob[:4] != _MAGIC:
+            raise ValueError(f"not a bloom blob: magic {bytes(blob[:4])!r}")
+        m_bits, k = struct.unpack("<QI", blob[4:16]) if len(blob) >= 16 else (0, 0)
+        if m_bits == 0 or len(blob) != 16 + m_bits // 8:
+            raise ValueError(
+                f"bloom blob is {len(blob)} bytes, header says "
+                f"{16 + m_bits // 8} (m_bits={m_bits})"
+            )
         words = np.frombuffer(blob[16:], dtype=np.uint64).copy()
         return cls(m_bits, k, words)

@@ -156,21 +156,14 @@ class CrawlConfig:
     # --- D2 bloom prefilter sidecar (SURVEY.md §2.3) ---
     # Probabilistic per-bucket URL-seen filters prune the exact dedup join's
     # probe volume; semantics never depend on them (no false negatives by
-    # construction; false positives resolved by the exact join). Sized here
-    # for sandbox corpora — at the 10^10-URL design point raise bits/bucket
-    # (and N_BUCKETS) so each blob holds ~n_keys/bucket at ~1% FPP.
-    dedup_bloom: bool = True
+    # construction; false positives resolved by the exact join). The sidecar
+    # switches on once the seen set reaches bloom_min_seen (below). Sized
+    # here for sandbox corpora: at the default threshold each bucket's blob
+    # takes bloom_min_seen // n_buckets ≈ 31k keys at ~0.23 FPP — at the
+    # 10^10-URL design point raise bits/bucket (and n_buckets) so each blob
+    # holds ~n_keys/bucket at ~1% FPP.
     bloom_bits_per_bucket: int = 1 << 17   # 16 KiB/bucket at n_buckets=32
     bloom_k: int = 7
-    # Sidecar filter family (the north star names "bloom/cuckoo-filter URL-
-    # seen set"): "bloom" (default — smaller per key, OR-mergeable) or
-    # "cuckoo" (sparkcrawl/cuckoo.py — same memory budget via
-    # bloom_bits_per_bucket, same no-false-negative contract, plus in-place
-    # DELETION so seen-TTL/recrawl maintenance subtracts expired keys from
-    # blobs instead of rebuilding the sidecar from the full 10^10-key seen
-    # table). Blobs self-describe by magic, so flipping this mid-store is
-    # safe: old buckets keep probing under their old kind.
-    seen_filter_kind: str = "bloom"
     # --- layout knobs (promoted from frontier.py module constants, r1 #9) ---
     # n_buckets: url_hash bucket count for the seen/pages hive layout; scale
     # with the corpus so each bucket's bloom blob holds ~n_keys/n_buckets at

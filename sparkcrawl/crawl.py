@@ -182,17 +182,11 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument(
-        "--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
-        help="sidecar filter family for the URL-seen set: bloom (default) "
-             "or cuckoo (deletion-capable — enables --forget-before "
-             "in-place sidecar maintenance)",
-    )
-    ap.add_argument(
         "--forget-before", type=int, metavar="ROUND", default=None,
         help="maintenance mode: forget seen keys first enqueued at or "
-             "before ROUND (seen-TTL / recrawl), update the sidecar "
-             "(in-place for cuckoo stores, rebuild for bloom), then exit "
-             "without crawling",
+             "before ROUND (seen-TTL / recrawl), rebuild the bloom sidecar "
+             "from the kept keys if the store has one, then exit without "
+             "crawling",
     )
     ap.add_argument(
         "--recrawl-budget", type=int, metavar="N", default=None,
@@ -228,7 +222,6 @@ def main() -> None:
         max_rounds=args.max_rounds,
         depth_limit=args.depth_limit,
         obey_robots=not args.no_robots,
-        seen_filter_kind=args.seen_filter,
     )
     if args.recrawl_budget is not None and args.forget_before is None:
         ap.error("--recrawl-budget requires --forget-before (it re-enqueues "

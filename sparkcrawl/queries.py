@@ -57,8 +57,10 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     (~0.9 s × 44 ≈ 40 s, measured at sf0.1). The memo lives as an
     attribute ON the session object (dies with it, no id()-reuse hazard)
     and re-registers whenever the sf_dir changes or any view is missing
-    from the catalog (tests drop/replace individual views; the existence
-    sweep costs ~0.09 s)."""
+    from the catalog (the existence sweep costs ~0.09 s). Callers that
+    swap a battery view must DROP it to invalidate the memo: a bare
+    createOrReplaceTempView at the same sf_dir passes the sweep, and the
+    replacement is then served to every later battery entry."""
     if getattr(spark, "_sparkcrawl_views_dir", None) == sf_dir and all(
         spark.catalog.tableExists(t) for t in TABLES
     ):
@@ -763,7 +765,9 @@ def _q_gopher_rules(engine: str) -> str:
     # a pure function of the row, so the filter distributes perfectly and
     # rides the same scan as any other per-doc projection. kept compares
     # the ROUNDED signal columns, so both engines decide boundaries on
-    # identical doubles.
+    # identical doubles. Documents under 3 tokens (fewer than 2 spaces, the
+    # shingle guard below) get NO row on either engine — not kept=false —
+    # so the output is not a verdict for every document.
     sh = _shingles(engine)
     stopw = "'the','a','and','of','to','in','is','that'"
     if engine == "spark":
@@ -3494,7 +3498,7 @@ _BPE_K = 12
 
 
 def _q_bpe_merges_oracle() -> str:
-    """DuckDB oracle for ``bpe_merges``: the identical 16-step merge
+    """DuckDB oracle for ``bpe_merges``: the identical ``_BPE_K``-step merge
     recurrence as chained MATERIALIZED CTEs — each step's argmax pair
     (count DESC, lhs ASC, rhs ASC) feeds the next step's merged state.
     MATERIALIZED is load-bearing: every state CTE is referenced twice

@@ -49,7 +49,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as _T
 
 from sparkcrawl.config import CrawlConfig
-from sparkcrawl.cuckoo import MAGIC as _CUCKOO_MAGIC
 from sparkcrawl.frontier import (
     FRONTIER_COLS,
     N_BUCKETS,
@@ -61,7 +60,6 @@ from sparkcrawl.frontier import (
     with_bucket,
 )
 from sparkcrawl.seenfilter import (
-    delete_bucket_keys,
     empty_sidecar,
     merge_bucket_blobs,
     probe_partitioned,
@@ -214,10 +212,9 @@ def init_crawl(spark: SparkSession, store: SnapStore, seeds_path: str,
     # by the retry (duplicate seed keys would fan out the dedup left join)
     s_snap = store.append("seen", seen, partition_by=["bucket"], parent=None)
     tables = {"frontier": f_snap, "seen": s_snap}
-    if cfg.dedup_bloom and n_seeds >= cfg.bloom_min_seen:
+    if n_seeds >= cfg.bloom_min_seen:
         blobs = merge_bucket_blobs(
-            fr, empty_sidecar(spark), cfg.bloom_bits_per_bucket, cfg.bloom_k,
-            kind=cfg.seen_filter_kind,
+            fr, empty_sidecar(spark), cfg.bloom_bits_per_bucket, cfg.bloom_k
         )
         tables["seen_filter"] = store.overwrite("seen_filter", blobs)
     empty_robots = spark.createDataFrame(
@@ -501,7 +498,7 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     seen_keys = store.read(spark, "seen", snaps["seen"]).select(
         "bucket", "url_hash", "canon"
     )
-    use_bloom = cfg.dedup_bloom and seen_total >= cfg.bloom_min_seen
+    use_bloom = seen_total >= cfg.bloom_min_seen
     sidecar_prev: DataFrame | None = None
     # Redirect + retry outcome predicates (RedirectMiddleware/RetryMiddleware
     # semantics pinned in CrawlConfig; oracle/crawler.py mirrors the same
@@ -821,15 +818,14 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
         base = fresh.select("bucket", "url_hash")
         old_sc = sidecar_prev
         if not have_sidecar:
-            # first activation (seen just crossed bloom_min_seen, or store
-            # initialized with bloom off): backfill from the FULL seen set —
-            # a partial sidecar would produce false negatives, which the
-            # design forbids
+            # first activation (seen just crossed bloom_min_seen, or the
+            # store was started under a higher one): backfill from the FULL
+            # seen set — a partial sidecar would produce false negatives,
+            # which the design forbids
             base = base.unionByName(seen_keys.select("bucket", "url_hash"))
             old_sc = empty_sidecar(spark)
         merged = merge_bucket_blobs(
-            base, old_sc, cfg.bloom_bits_per_bucket, cfg.bloom_k,
-            kind=cfg.seen_filter_kind,
+            base, old_sc, cfg.bloom_bits_per_bucket, cfg.bloom_k
         )
         return store.overwrite("seen_filter", merged)
 
@@ -950,16 +946,10 @@ def forget_seen(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     recrawl means a new JOBDIR; at the 10^10-URL design point re-seeding is
     not an option and the seen set must age in place).
 
-    Two sidecar paths, chosen by sniffing the committed blobs' magic (NOT
-    cfg — a store built under one kind must maintain correctly after the
-    config flips):
-
-    - **cuckoo** blobs: in-place ``delete_bucket_keys`` — one cogroup task
-      per bucket, streaming ONLY the expired keys. This is the path that
-      justifies the cuckoo backend: cost scales with |expired|, not |seen|.
-    - **bloom** blobs: full rebuild from the kept keys (bloom bits are
-      shared across keys, so subtraction is impossible) — a complete pass
-      over the kept seen set, ~10^10 keys at the design point.
+    A store with a sidecar rebuilds it from the kept keys (bloom bits are
+    shared across keys, so subtraction is impossible): one more pass over
+    the kept set, which this function rewrites as the new ``seen`` snapshot
+    anyway, so the rebuild does not change the order of its cost.
 
     Commits new ``seen``/``seen_filter`` snapshots and REWRITES the last
     round manifest (atomic rename, same protocol as commit_round) with the
@@ -1005,19 +995,11 @@ def forget_seen(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     snaps["seen"] = store.overwrite("seen", kept, partition_by=["bucket"])
 
     if "seen_filter" in snaps:
-        sidecar = store.read(spark, "seen_filter", snaps["seen_filter"])
-        head = sidecar.select("filter").head(1)
-        is_cuckoo = bool(head) and bytes(head[0]["filter"])[:4] == _CUCKOO_MAGIC
-        if is_cuckoo:
-            new_sc = delete_bucket_keys(expired, sidecar)
-            out["sidecar"] = "cuckoo_delete"
-        else:
-            new_sc = merge_bucket_blobs(
-                kept.select("bucket", "url_hash"), empty_sidecar(spark),
-                cfg.bloom_bits_per_bucket, cfg.bloom_k,
-                kind=cfg.seen_filter_kind,
-            )
-            out["sidecar"] = "rebuild"
+        new_sc = merge_bucket_blobs(
+            kept.select("bucket", "url_hash"), empty_sidecar(spark),
+            cfg.bloom_bits_per_bucket, cfg.bloom_k,
+        )
+        out["sidecar"] = "rebuild"
         snaps["seen_filter"] = store.overwrite("seen_filter", new_sc)
 
     expired.unpersist()
@@ -1165,7 +1147,6 @@ def recrawl_enqueue(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
         merged = merge_bucket_blobs(
             rows.select("bucket", "url_hash"), sidecar,
             cfg.bloom_bits_per_bucket, cfg.bloom_k,
-            kind=cfg.seen_filter_kind,
         )
         snaps["seen_filter"] = store.overwrite("seen_filter", merged)
     rows.unpersist()

@@ -36,32 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from sparkcrawl.bloom import BloomFilter
-from sparkcrawl.cuckoo import MAGIC as _CUCKOO_MAGIC
-from sparkcrawl.cuckoo import CuckooFilter, capacity_for_bits
 
 SIDECAR_SCHEMA_DDL = "bucket int, filter binary"
-
-
-def load_filter(blob: bytes):
-    """Deserialize a sidecar blob by magic — bloom (``SBF1``) and cuckoo
-    (``SCK1``) blobs coexist in one sidecar table, so a store created under
-    one ``seen_filter_kind`` keeps probing correctly after the config flips
-    (new buckets get the new kind; old blobs stay readable)."""
-    if blob[:4] == _CUCKOO_MAGIC:
-        return CuckooFilter.from_bytes(blob)
-    return BloomFilter.from_bytes(blob)
-
-
-def new_filter(kind: str, m_bits: int, k: int):
-    """Empty filter for a fresh bucket. Both kinds size off the same
-    ``m_bits`` memory budget (config.bloom_bits_per_bucket); ``k`` is
-    bloom-only. Cuckoo buys in-place deletion (seen-TTL maintenance without
-    a full sidecar rebuild) at the same no-false-negative contract."""
-    if kind == "cuckoo":
-        return CuckooFilter(capacity_for_bits(m_bits))
-    if kind == "bloom":
-        return BloomFilter(m_bits, k)
-    raise ValueError(f"unknown seen_filter_kind: {kind!r}")
 
 SIDECAR_SPARK_SCHEMA = T.StructType(
     [
@@ -87,7 +63,7 @@ def probe_partitioned(
     def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if right.empty or left.empty:
             return left.assign(_maybe=np.zeros(len(left), dtype=bool))
-        bf = load_filter(bytes(right["filter"].iloc[0]))
+        bf = BloomFilter.from_bytes(bytes(right["filter"].iloc[0]))
         return left.assign(
             _maybe=bf.contains_many(left["url_hash"].to_numpy(dtype=np.int64))
         )
@@ -100,17 +76,14 @@ def probe_partitioned(
 
 
 def merge_bucket_blobs(
-    fresh_keys: DataFrame, sidecar: DataFrame, m_bits: int, k: int,
-    kind: str = "bloom",
+    fresh_keys: DataFrame, sidecar: DataFrame, m_bits: int, k: int
 ) -> DataFrame:
     """(bucket, url_hash) fresh rows ⊕ previous sidecar → the next sidecar.
-    Buckets with fresh keys merge them into their old blob (or a new empty
-    one of ``kind``); buckets without fresh keys pass their blob through.
-    Fully distributed — one task per bucket, nothing through the driver.
-    Fresh keys are sorted before insertion: bloom OR is order-independent,
-    but cuckoo kick chains are not, and sidecar blobs are committed bytes
-    that deterministic resume must reproduce regardless of cogroup arrival
-    order."""
+    Buckets with fresh keys OR them into their old blob (or a new empty
+    one); buckets without fresh keys pass their blob through. Fully
+    distributed — one task per bucket, nothing through the driver. The OR
+    is order-independent, so the committed blob bytes that deterministic
+    resume must reproduce do not depend on cogroup arrival order."""
 
     def _merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty and right.empty:  # cogroup never emits this, be safe
@@ -118,9 +91,9 @@ def merge_bucket_blobs(
                                  "filter": []})
         bucket = int((left if not left.empty else right)["bucket"].iloc[0])
         if right.empty:
-            bf = new_filter(kind, m_bits, k)
+            bf = BloomFilter(m_bits, k)
         else:
-            bf = load_filter(bytes(right["filter"].iloc[0]))
+            bf = BloomFilter.from_bytes(bytes(right["filter"].iloc[0]))
         if not left.empty:
             keys = np.unique(left["url_hash"].to_numpy(dtype=np.int64))
             bf.add_many(keys)
@@ -133,38 +106,3 @@ def merge_bucket_blobs(
         .applyInPandas(_merge, SIDECAR_SCHEMA_DDL)
     )
 
-
-def delete_bucket_keys(
-    expired_keys: DataFrame, sidecar: DataFrame
-) -> DataFrame:
-    """(bucket, url_hash) expired rows ⊖ sidecar → the next sidecar, via
-    in-place cuckoo deletion (the maintenance path bloom blobs cannot take —
-    callers rebuild those instead; see rounds.forget_seen). Same cogroup
-    shape as :func:`merge_bucket_blobs`: one task per bucket, blob bytes
-    move once. Keys are uniqued+sorted for blob determinism; deleting a key
-    absent from the blob is a no-op (delete_many returns found-flags, which
-    maintenance ignores — the exact seen table is authoritative)."""
-
-    def _delete(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if right.empty:  # no blob for this bucket — nothing to subtract
-            return pd.DataFrame({"bucket": pd.array([], dtype="int32"),
-                                 "filter": []})
-        bucket = int(right["bucket"].iloc[0])
-        blob = bytes(right["filter"].iloc[0])
-        if left.empty:
-            return pd.DataFrame({"bucket": [bucket], "filter": [blob]})
-        cf = load_filter(blob)
-        if not isinstance(cf, CuckooFilter):
-            raise TypeError(
-                "delete_bucket_keys requires cuckoo blobs; bloom sidecars "
-                "must rebuild (bloom bits are shared across keys)"
-            )
-        cf.delete_many(np.unique(left["url_hash"].to_numpy(dtype=np.int64)))
-        return pd.DataFrame({"bucket": [bucket], "filter": [cf.to_bytes()]})
-
-    return (
-        expired_keys.select("bucket", "url_hash")
-        .groupBy("bucket")
-        .cogroup(sidecar.groupBy("bucket"))
-        .applyInPandas(_delete, SIDECAR_SCHEMA_DDL)
-    )

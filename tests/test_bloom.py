@@ -4,6 +4,7 @@ negative would silently re-crawl), mergeability, serialization round-trip,
 bounded false-positive rate."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -55,3 +56,31 @@ def test_deterministic_blob():
         BloomFilter.build([1, 2, 3], m, k).to_bytes()
         == BloomFilter.build([3, 1, 2], m, k).to_bytes()
     )
+
+
+def test_from_bytes_rejects_foreign_and_truncated_blobs():
+    """A foreign-magic blob (e.g. an SCK1 cuckoo blob from an older store)
+    or a truncated one must raise, never be misread into false negatives —
+    and the check must survive ``python -O`` (ValueError, not assert)."""
+    blob = BloomFilter.build([1, 2, 3], 1024, 7).to_bytes()
+    with pytest.raises(ValueError, match="magic"):
+        BloomFilter.from_bytes(b"SCK1" + blob[4:])
+    for cut in (len(blob) - 8, len(blob) - 1, 16, 10):
+        with pytest.raises(ValueError):
+            BloomFilter.from_bytes(blob[:cut])
+    with pytest.raises(ValueError):
+        BloomFilter.from_bytes(blob + b"\0" * 8)
+
+
+def test_default_config_bucket_share_has_no_false_negatives():
+    """The sidecar switches on at ``bloom_min_seen`` keys, so one bucket's
+    blob must hold ``bloom_min_seen // n_buckets`` keys at the default
+    ``bloom_bits_per_bucket``/``bloom_k`` — the load the former cuckoo
+    family overflowed its stash on — with no false negatives."""
+    from sparkcrawl.config import CrawlConfig
+
+    cfg = CrawlConfig()
+    n = cfg.bloom_min_seen // cfg.n_buckets
+    keys = np.random.default_rng(11).integers(-(2**63), 2**63 - 1, n)
+    bf = BloomFilter.build(keys, cfg.bloom_bits_per_bucket, cfg.bloom_k)
+    assert BloomFilter.from_bytes(bf.to_bytes()).contains_many(keys).all()

@@ -490,39 +490,22 @@ def test_finish_reason_matches_oracle(spark, corpus, crawled, golden, tmp_path_f
     assert len(s) == 1
 
 
-def test_cuckoo_sidecar_equals_bloom_path(spark, corpus, golden, tmp_path_factory):
-    """seen_filter_kind="cuckoo" swaps the sidecar family (sparkcrawl/
-    cuckoo.py) under the identical probe/merge cogroups; schedule ordering
-    and the final seen set must equal the bloom-path golden run bit-for-bit,
-    and the committed blobs must actually be cuckoo (magic SCK1)."""
-    from sparkcrawl.cuckoo import MAGIC
-
-    cfg = CrawlConfig(round_size=50, bloom_min_seen=0, seen_filter_kind="cuckoo")
-    store_dir = str(tmp_path_factory.mktemp("store_cuckoo"))
-    run_crawl(spark, corpus, store_dir, cfg)
-    store = SnapStore(store_dir)
-    got = spark_rounds(spark, store)
-    for i, g in enumerate(golden.rounds):
-        assert got.get(i, []) == g, f"round {i}"
-    seen = {r["canon"] for r in store.read(spark, "seen").select("canon").collect()}
-    assert seen == golden.seen
-    blobs = store.read(spark, "seen_filter").select("filter").collect()
-    assert blobs and all(bytes(r["filter"])[:4] == MAGIC for r in blobs)
-
-
-@pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
-def test_forget_seen_ttl_maintenance(spark, corpus, tmp_path_factory, kind):
+def test_forget_seen_ttl_maintenance(spark, corpus, tmp_path_factory,
+                                     monkeypatch):
     """forget_seen (seen-TTL / recrawl): keys first enqueued at or before the
-    cutoff leave the seen table AND stop probing positive in the sidecar —
-    in place for cuckoo blobs (delete_bucket_keys), via full rebuild for
-    bloom; kept keys must still probe positive (no false negatives). The
-    rewritten round manifest carries the shrunken seen_total, so a resumed
-    crawl continues from the post-forget state."""
-    from sparkcrawl.rounds import forget_seen
-    from sparkcrawl.seenfilter import load_filter
+    cutoff leave the seen table AND stop probing positive in the sidecar,
+    which is rebuilt from the kept keys; kept keys must still probe positive
+    (no false negatives). The rebuild needs no look at the old blobs, so
+    forget_seen runs no head() job on the sidecar. The rewritten round
+    manifest carries the shrunken seen_total, so a resumed crawl continues
+    from the post-forget state."""
+    from pyspark.sql import DataFrame
 
-    cfg = CrawlConfig(round_size=50, bloom_min_seen=0, seen_filter_kind=kind)
-    store_dir = str(tmp_path_factory.mktemp(f"store_forget_{kind}"))
+    from sparkcrawl.bloom import BloomFilter
+    from sparkcrawl.rounds import forget_seen
+
+    cfg = CrawlConfig(round_size=50, bloom_min_seen=0)
+    store_dir = str(tmp_path_factory.mktemp("store_forget"))
     run_crawl(spark, corpus, store_dir, cfg)
     store = SnapStore(store_dir)
     before = store.read(spark, "seen").select(
@@ -535,16 +518,21 @@ def test_forget_seen_ttl_maintenance(spark, corpus, tmp_path_factory, kind):
             if r["first_round"] > cutoff}
     assert expired and kept  # the fixture crawl spans enough rounds
 
-    res = forget_seen(spark, store, cfg, up_to_round=cutoff)
+    def _no_head(self, n=None):
+        raise AssertionError("forget_seen must not sniff the sidecar")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "head", _no_head)
+        res = forget_seen(spark, store, cfg, up_to_round=cutoff)
     assert res["forgot"] == len(expired)
-    assert res["sidecar"] == ("cuckoo_delete" if kind == "cuckoo" else "rebuild")
+    assert res["sidecar"] == "rebuild"
 
     after = {(r["bucket"], r["url_hash"])
              for r in store.read(spark, "seen")
              .select("bucket", "url_hash").collect()}
     assert after == kept
 
-    filters = {r["bucket"]: load_filter(bytes(r["filter"]))
+    filters = {r["bucket"]: BloomFilter.from_bytes(bytes(r["filter"]))
                for r in store.read(spark, "seen_filter").collect()}
     for b, h in kept:  # hard invariant: kept keys never go negative
         assert filters[b].contains_many([h]).all(), (b, h)
@@ -570,8 +558,7 @@ def test_forget_seen_exempts_queued_keys(spark, corpus, tmp_path_factory):
     forget with a cutoff past every round."""
     from sparkcrawl.rounds import forget_seen
 
-    cfg = CrawlConfig(round_size=50, bloom_min_seen=0,
-                      seen_filter_kind="cuckoo", max_rounds=3)
+    cfg = CrawlConfig(round_size=50, bloom_min_seen=0, max_rounds=3)
     store_dir = str(tmp_path_factory.mktemp("store_forget_queued"))
     run_crawl(spark, corpus, store_dir, cfg)
     store = SnapStore(store_dir)
@@ -599,15 +586,14 @@ def test_recrawl_enqueue_forget_score_requeue_refetch(
     over the same store tables. The re-enqueued set must be exactly the
     top-budget forgotten keys by the Cho & Garcia-Molina age·λ score
     (host-level λ from terminal fetch history, age to last_round+1, ties by
-    url_hash), the rows must re-enter seen + the cuckoo sidecar in the same
+    url_hash), the rows must re-enter seen + the bloom sidecar in the same
     maintenance commit, and a --resume crawl must actually refetch them."""
     from sparkcrawl.canon import seq_for_seed
     from sparkcrawl.crawl import schedule_view
+    from sparkcrawl.bloom import BloomFilter
     from sparkcrawl.rounds import forget_seen, recrawl_enqueue
-    from sparkcrawl.seenfilter import load_filter
 
-    cfg = CrawlConfig(round_size=50, bloom_min_seen=0,
-                      seen_filter_kind="cuckoo")
+    cfg = CrawlConfig(round_size=50, bloom_min_seen=0)
     store_dir = str(tmp_path_factory.mktemp("store_recrawl"))
     run_crawl(spark, corpus, store_dir, cfg)
     store = SnapStore(store_dir)
@@ -678,7 +664,7 @@ def test_recrawl_enqueue_forget_score_requeue_refetch(
                   for r in store.read(spark, "seen").collect()}
     for k in want_keys:
         assert seen_after[k] == last + 1
-    filters = {r["bucket"]: load_filter(bytes(r["filter"]))
+    filters = {r["bucket"]: BloomFilter.from_bytes(bytes(r["filter"]))
                for r in store.read(spark, "seen_filter").collect()}
     for r in new_rows:
         b = r["url_hash"] % cfg.n_buckets  # Python % ≡ Spark pmod for n>0
@@ -689,8 +675,7 @@ def test_recrawl_enqueue_forget_score_requeue_refetch(
     assert meta["forgot_keys"] == len(expired)
 
     # ---- round boundary: resume refetches the re-enqueued urls
-    cfg2 = CrawlConfig(round_size=50, bloom_min_seen=0,
-                       seen_filter_kind="cuckoo", max_rounds=last + 4)
+    cfg2 = CrawlConfig(round_size=50, bloom_min_seen=0, max_rounds=last + 4)
     run_crawl(spark, corpus, store_dir, cfg2, resume=True)
     refetched = {r["canon"]
                  for r in schedule_view(spark, store)
